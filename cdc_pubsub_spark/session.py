@@ -35,7 +35,11 @@ def get_spark(app_name: str = "cdc-pubsub-spark", cpus: int | None = None) -> Sp
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Static shuffle width for local mode; AQE coalesces below this.
-        # On a real cluster this would be ~2-3x total cores.
+        # On a real cluster this would be ~2-3x total cores. Streaming
+        # queries start with min(this, defaultParallelism) instead
+        # (streaming.harness.start_query): stateful state is partitioned
+        # over this width, AQE cannot coalesce it, and the value is
+        # pinned per checkpoint at first start.
         .config("spark.sql.shuffle.partitions", "32")
         # Arrow batches for every pandas UDF / toPandas exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -69,7 +73,9 @@ def get_spark(app_name: str = "cdc-pubsub-spark", cpus: int | None = None) -> Sp
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         # Local mode = driver-only JVM; this is the one memory knob that
-        # matters (host has 128 GiB; leave room for Python workers).
+        # matters. Size SPARK_DRIVER_MEMORY to the host, leaving room for
+        # the Python workers (the 24g default is a heap ceiling; the JVM
+        # commits heap only as it grows).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         # Warehouse for bucketed tables (join_bucketed_colocated) — kept

@@ -205,6 +205,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from cdc_pubsub_spark.paths import work_dir
+    from cdc_pubsub_spark.streaming.harness import start_query
 
     try:
         spark.dataSource.register(ChangefeedStreamDataSource)
@@ -231,7 +232,8 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("price"), 2).alias("total_price"),
     )
     qname = f"pyds_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
+    q = start_query(
+        spark,
         agg.writeStream.format("memory")
         .queryName(qname)
         .outputMode("complete")
@@ -239,8 +241,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "checkpointLocation",
             _os.path.join(work_dir("pyds_stream"), f"ckpt_{qname}"),
         )
-        .trigger(processingTime="250 milliseconds")
-        .start()
+        .trigger(processingTime="250 milliseconds"),
     )
     try:
         deadline = _time.time() + 120

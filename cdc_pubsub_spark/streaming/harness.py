@@ -12,22 +12,44 @@ so every streaming operator has a batch twin on identical rows
 
 Timestamps travel as epoch-micros longs (ts_us) in the JSON — exact,
 engine-neutral serialization; the reader reconstructs TimestampType.
+
+Start contract: every streaming query in the engine starts through
+`start_query` (run_to_completion included; tests/test_streaming.py fails
+on any other `writeStream…start()` in the package). A stateful query's
+state is partitioned over `spark.sql.shuffle.partitions`, AQE never
+coalesces it, and the count is pinned in the checkpoint's offset log at
+first start — the batch width of 32 would open and commit 32 state
+stores per trigger on a 4-core host. `start_query` starts the query with
+the conf lowered to min(current, defaultParallelism) and restores the
+previous value before returning: `StreamExecution` clones the session at
+start, so the clone (foreachBatch bodies included) keeps the lowered
+width for the query's whole life, while the caller's session is back at
+its batch width. A restart from an existing checkpoint keeps the count
+the checkpoint recorded. A batch query planned on another thread inside
+the short start window merely begins with fewer shuffle partitions —
+AQE re-plans it, and results do not depend on the partition count
+(tests/test_determinism.py::test_partition_count_insensitive).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from cdc_pubsub_spark.paths import work_dir
 from cdc_pubsub_spark.tables import load
 
 BASE = work_dir("stream")
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_START_LOCK = threading.Lock()
 
 EVENT_JSON_SCHEMA = (
     "event_id bigint, ts_us bigint, user_id bigint, event_type string, "
@@ -167,6 +189,20 @@ def read_event_stream_push(
     )
 
 
+def start_query(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """`writer.start()` with the shuffle width sized to the cores (see
+    the module docstring for the contract). The lock serializes the
+    set/start/restore window across threads sharing the session."""
+    with _START_LOCK:
+        prev = spark.conf.get(SHUFFLE_PARTITIONS)
+        width = min(int(prev), spark.sparkContext.defaultParallelism)
+        spark.conf.set(SHUFFLE_PARTITIONS, str(width))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(SHUFFLE_PARTITIONS, prev)
+
+
 def run_to_completion(
     stream_df: DataFrame,
     name: str,
@@ -189,9 +225,11 @@ def run_to_completion(
         availableNow=True
     )
     if foreach_batch is not None:
-        q = writer.foreachBatch(foreach_batch).start()
+        q = start_query(spark, writer.foreachBatch(foreach_batch))
         q.awaitTermination()
         return None
-    q = writer.format("memory").queryName(qname).outputMode(output_mode).start()
+    q = start_query(
+        spark, writer.format("memory").queryName(qname).outputMode(output_mode)
+    )
     q.awaitTermination()
     return spark.table(qname)

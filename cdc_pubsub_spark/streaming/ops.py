@@ -16,8 +16,11 @@ bug publisher.go:209-211 that makes dedup doubly essential).
 
 from __future__ import annotations
 
+import http.server
 import os
 import shutil
+import threading
+import urllib.parse
 
 import pandas as pd
 
@@ -32,8 +35,10 @@ from cdc_pubsub_spark.streaming.harness import (
     read_event_stream,
     read_event_stream_push,
     run_to_completion,
+    start_query,
     write_events_ndjson,
 )
+from cdc_pubsub_spark.tables import load
 
 
 @register(
@@ -443,7 +448,8 @@ def sink_debug_console(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     input_dir = write_events_ndjson(spark, sf_dir, "debug_console")
     stream = read_event_stream(spark, input_dir)
-    console_q = (
+    console_q = start_query(
+        spark,
         stream.writeStream.format("console")
         .option("numRows", 5)
         .option("truncate", True)
@@ -451,8 +457,7 @@ def sink_debug_console(spark: SparkSession, sf_dir: str) -> DataFrame:
             "checkpointLocation",
             os.path.join(BASE, "debug_console", "ck_console"),
         )
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     console_q.awaitTermination()
     counted = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
@@ -553,7 +558,7 @@ def pipeline_bridge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     input_dir = os.path.join(root, "input")
     os.makedirs(input_dir)
 
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    orders = load(spark, sf_dir, "orders")
     day = F.date_trunc("day", F.col("o_orderdate"))
     day_num = F.datediff(day.cast("date"), F.lit("1995-01-01").cast("date"))
     env_line = F.concat(
@@ -1022,9 +1027,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _event_lines_for_join(spark: SparkSession, sf_dir: str) -> dict:
     """Events as NDJSON lines plus the max ts_us (for kicker synthesis)."""
     lines = _event_lines(spark, sf_dir)
-    from cdc_pubsub_spark.tables import load as _load
-
-    ev = _load(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     max_ts_us = ev.agg(
         F.max(F.unix_micros(F.col("ts").cast("timestamp")))
     ).collect()[0][0]
@@ -1056,8 +1059,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream with a dim that fits in memory this never shuffles the stream
     side; a bigger dim falls back to shuffled join per micro-batch.
     """
-    from cdc_pubsub_spark.tables import load
-
     input_dir = write_events_ndjson(spark, sf_dir, "static_join")
     stream = read_event_stream(spark, input_dir)
     dim = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -1214,11 +1215,11 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run_instance() -> None:
         stream = read_event_stream(spark, input_dir)
-        q = (
+        q = start_query(
+            spark,
             stream.writeStream.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .foreachBatch(publish)
-            .start()
+            .foreachBatch(publish),
         )
         q.awaitTermination()
 
@@ -1285,13 +1286,13 @@ def stream_push_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("event_id").alias("max_id"),
     )
     qname = f"push_ingest_{_uuid.uuid4().hex[:8]}"
-    q = (
+    q = start_query(
+        spark,
         agg.writeStream.format("memory")
         .queryName(qname)
         .outputMode("complete")
         .option("checkpointLocation", os.path.join(BASE, "push_ingest", qname))
-        .trigger(processingTime="250 milliseconds")
-        .start()
+        .trigger(processingTime="250 milliseconds"),
     )
     try:
         deadline = _time.time() + 30
@@ -1412,13 +1413,13 @@ def stream_health_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, input_dir, max_files_per_trigger=1)
     agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     qname = f"health_{_uuid.uuid4().hex[:8]}"
-    q = (
+    q = start_query(
+        spark,
         agg.writeStream.format("memory")
         .queryName(qname)
         .outputMode("complete")
         .option("checkpointLocation", os.path.join(BASE, "health_drain", qname))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     # The status dict is sampled while the query may still be running —
     # proof the probe works mid-flight — but the EMITTED columns must be
@@ -1523,13 +1524,13 @@ def pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("value"), 2).alias("value_total"),
     )
     qname = f"pipeline_metrics_{_uuid.uuid4().hex[:8]}"
-    q = (
+    q = start_query(
+        spark,
         observed.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
         .option("checkpointLocation", os.path.join(root, f"ckpt_{qname}"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     q.awaitTermination()
     rows = []
@@ -1585,7 +1586,6 @@ def stream_socket_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a hash-certified result.
     """
     import socket as _socket
-    import threading as _threading
     import time as _time
     import uuid as _uuid
 
@@ -1664,8 +1664,8 @@ def stream_socket_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose finally may never run.
     conns: list = []
 
-    done_evt = _threading.Event()
-    t = _threading.Thread(target=serve, daemon=True)
+    done_evt = threading.Event()
+    t = threading.Thread(target=serve, daemon=True)
     t.start()
 
     raw = (
@@ -1683,12 +1683,12 @@ def stream_socket_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qname = f"socket_ingest_{_uuid.uuid4().hex[:8]}"
     try:
-        q = (
+        q = start_query(
+            spark,
             agg.writeStream.format("memory")
             .queryName(qname)
             .outputMode("complete")
-            .trigger(processingTime="250 milliseconds")
-            .start()
+            .trigger(processingTime="250 milliseconds"),
         )
     except Exception:
         done_evt.set()  # release the server thread if start() itself fails
@@ -1733,6 +1733,77 @@ def stream_socket_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
         q.awaitTermination()
     return spark.table(qname)
+
+
+class _LandingHandler(http.server.BaseHTTPRequestHandler):
+    """One request body -> one atomically-renamed landing file; any other
+    path/method is rejected exactly like the reference's mux
+    (server.go:82-92 registers only the feed route), and the sharedKey
+    check runs FIRST — the reference 401s before its path regexes ever
+    see the URL (publisher.go:143-150)."""
+
+    def do_POST(self):  # noqa: N802 (http.server API name)
+        rx = self.server.receiver
+        path, _, query = self.path.partition("?")
+        params = urllib.parse.parse_qs(query)
+        key = (params.get("sharedKey") or [""])[0]
+        if key not in rx.shared_keys:
+            # Drain the body before rejecting: closing with unread bytes
+            # RSTs the client mid-upload (Go's net/http drains short
+            # bodies the same way); the payload is discarded.
+            self.rfile.read(int(self.headers.get("Content-Length", 0)))
+            with rx.lock:
+                rx.n_unauthorized += 1
+            self.send_error(401)
+            return
+        if path != "/v1/feed":
+            self.send_error(404)
+            return
+        length = int(self.headers.get("Content-Length", 0))
+        body = self.rfile.read(length)
+        # Handler threads run concurrently: hand out the sequence number
+        # under the lock, or two POSTs could share a landing file name
+        # and one body would silently replace the other.
+        with rx.lock:
+            seq = rx.n_received
+            rx.n_received += 1
+        tmp = os.path.join(rx.tmp_dir, f"{seq:06d}.ndjson")
+        with open(tmp, "wb") as fh:
+            fh.write(body)
+        os.rename(tmp, os.path.join(rx.input_dir, f"{seq:06d}.ndjson"))
+        self.send_response(200)
+        self.send_header("Content-Length", "2")
+        self.end_headers()
+        self.wfile.write(b"ok")
+
+    def log_message(self, *a):  # silence per-request stderr noise
+        pass
+
+
+class HttpLandingReceiver:
+    """In-process HTTP receiver (a `ThreadingHTTPServer` on a free
+    127.0.0.1 port, served from a daemon thread until `close()`) that
+    lands each authorized POST /v1/feed body as one NDJSON file in
+    `input_dir`, written under `tmp_dir` and renamed in. `n_received`
+    and `n_unauthorized` count landed bodies and 401s."""
+
+    def __init__(self, input_dir: str, tmp_dir: str, shared_keys: set[str]):
+        self.input_dir = input_dir
+        self.tmp_dir = tmp_dir
+        self.shared_keys = shared_keys
+        self.lock = threading.Lock()
+        self.n_received = 0
+        self.n_unauthorized = 0
+        self._srv = http.server.ThreadingHTTPServer(
+            ("127.0.0.1", 0), _LandingHandler
+        )
+        self._srv.receiver = self
+        self.port = self._srv.server_address[1]
+        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
+
+    def close(self) -> None:
+        self._srv.shutdown()
+        self._srv.server_close()
 
 
 @register(
@@ -1781,9 +1852,6 @@ def stream_http_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared storage, where the engine side of this op scales with the
     landing volume only.
     """
-    import http.server as _httpserver
-    import threading as _threading
-    import urllib.parse as _urlparse
     import urllib.request as _urlreq
     import uuid as _uuid
 
@@ -1797,51 +1865,9 @@ def stream_http_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(input_dir)
     os.makedirs(tmp_dir)
 
-    n_received = [0]
-    n_unauthorized = [0]
     shared_keys = {"s3kr1t-alpha", "s3kr1t-beta"}
-
-    class _Handler(_httpserver.BaseHTTPRequestHandler):
-        # One request body -> one atomically-renamed landing file; any
-        # other path/method is rejected exactly like the reference's
-        # mux (server.go:82-92 registers only the feed route), and the
-        # sharedKey check runs FIRST — the reference 401s before its
-        # path regexes ever see the URL (publisher.go:143-150).
-        def do_POST(self):  # noqa: N802 (http.server API name)
-            path, _, query = self.path.partition("?")
-            params = _urlparse.parse_qs(query)
-            key = (params.get("sharedKey") or [""])[0]
-            if key not in shared_keys:
-                # Drain the body before rejecting: closing with unread
-                # bytes RSTs the client mid-upload (Go's net/http drains
-                # short bodies the same way); the payload is discarded.
-                self.rfile.read(int(self.headers.get("Content-Length", 0)))
-                n_unauthorized[0] += 1
-                self.send_error(401)
-                return
-            if path != "/v1/feed":
-                self.send_error(404)
-                return
-            length = int(self.headers.get("Content-Length", 0))
-            body = self.rfile.read(length)
-            seq = n_received[0]
-            n_received[0] += 1
-            tmp = os.path.join(tmp_dir, f"{seq:06d}.ndjson")
-            with open(tmp, "wb") as fh:
-                fh.write(body)
-            os.rename(tmp, os.path.join(input_dir, f"{seq:06d}.ndjson"))
-            self.send_response(200)
-            self.send_header("Content-Length", "2")
-            self.end_headers()
-            self.wfile.write(b"ok")
-
-        def log_message(self, *a):  # silence per-request stderr noise
-            pass
-
-    srv = _httpserver.ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
-    port = srv.server_address[1]
-    t = _threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
+    receiver = HttpLandingReceiver(input_dir, tmp_dir, shared_keys)
+    port = receiver.port
     try:
         # 16 bodies at fixture scale, capped at _HTTP_BODY_LINES lines
         # per body at any scale — the sender buffers one body at a time.
@@ -1885,10 +1911,9 @@ def stream_http_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _expect(401, f"http://127.0.0.1:{port}/nope?sharedKey=bad", b"x")
         # Keyed but unregistered route: auth passes, mux 404s.
         _expect(404, f"http://127.0.0.1:{port}/nope?sharedKey=s3kr1t-alpha", b"x")
-        assert n_unauthorized[0] == 3, n_unauthorized[0]
+        assert receiver.n_unauthorized == 3, receiver.n_unauthorized
     finally:
-        srv.shutdown()
-        srv.server_close()
+        receiver.close()
 
     stream = read_event_stream(spark, input_dir)
     counted = stream.groupBy("event_type").agg(
@@ -1902,7 +1927,7 @@ def stream_http_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # auth tier stopped rejecting, this reads 0 and the oracle's
     # pinned 3 hash-fails the op even before the duplicate rows would.
     return result.withColumn(
-        "rejected_unauthorized", F.lit(n_unauthorized[0])
+        "rejected_unauthorized", F.lit(receiver.n_unauthorized)
     )
 
 

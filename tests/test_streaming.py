@@ -910,3 +910,187 @@ def test_session_window_state_evicts_below_watermark(spark, sf_dir):
         f"session state did not shrink after kicker: {totals}"
     )
     assert emitted > 0, "append mode emitted no closed sessions"
+
+
+def test_bridge_state_partitions_sized_to_cores(spark, sf_correct):
+    """The bridge's keyed streaming aggregations run one state store per
+    core, not one per batch shuffle partition: each stateful operator's
+    last progress reports min(32, defaultParallelism) shuffle
+    partitions, the caller's session keeps its batch width, and both
+    ops still hash-match their DuckDB oracles."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from tests.parity import assert_parity
+
+    last: dict[str, list] = {}
+
+    class _LastState(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.stateOperators:
+                last[str(p.id)] = [s.numShufflePartitions for s in p.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    want = min(int(before), spark.sparkContext.defaultParallelism)
+    listener = _LastState()
+    spark.streams.addListener(listener)
+    try:
+        for name in ("pipeline_bridge_e2e", "stream_http_ingest"):
+            n_queries = len(last)
+            assert_parity(spark, name, sf_correct)
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            assert len(last) > n_queries, f"{name}: no stateful progress seen"
+            assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    finally:
+        spark.streams.removeListener(listener)
+    for qid, widths in last.items():
+        assert widths == [want] * len(widths), (qid, widths, want)
+
+
+def test_start_query_restores_conf_when_start_fails(spark):
+    """A start that throws still puts the session's batch width back."""
+    import pytest
+
+    from cdc_pubsub_spark.streaming.harness import start_query
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    wide = str(spark.sparkContext.defaultParallelism + 3)
+    writer = spark.readStream.format("rate").load().writeStream.format(
+        "no_such_sink_format"
+    )
+    spark.conf.set(key, wide)
+    try:
+        with pytest.raises(Exception):
+            start_query(spark, writer)
+        assert spark.conf.get(key) == wide
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_http_receiver_lands_concurrent_posts(tmp_path):
+    """Concurrent POSTs each get their own landing file: the receiver's
+    sequence numbers and counters are handed out under a lock. A short
+    switch interval maximises interleaving between the handler threads."""
+    import sys
+    import threading
+    import urllib.request
+
+    from cdc_pubsub_spark.streaming.ops import HttpLandingReceiver
+
+    input_dir, tmp_dir = tmp_path / "input", tmp_path / "tmp"
+    input_dir.mkdir()
+    tmp_dir.mkdir()
+    rx = HttpLandingReceiver(str(input_dir), str(tmp_dir), {"k"})
+    url = f"http://127.0.0.1:{rx.port}/v1/feed?sharedKey=k"
+    bodies = [f'{{"body": {i}}}\n'.encode() for i in range(32)]
+    errors: list[BaseException] = []
+
+    def post(chunk):
+        try:
+            for body in chunk:
+                req = urllib.request.Request(url, data=body)
+                with urllib.request.urlopen(req, timeout=30) as r:
+                    assert r.status == 200
+        except BaseException as err:  # surfaced by the main thread
+            errors.append(err)
+
+    threads = [threading.Thread(target=post, args=(bodies[i::8],)) for i in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+        rx.close()
+    assert not any(t.is_alive() for t in threads), "a sender thread hung"
+    assert not errors, errors
+    landed = sorted(input_dir.iterdir())
+    assert len(landed) == 32 and rx.n_received == 32
+    assert sorted(p.read_bytes() for p in landed) == sorted(bodies)
+    assert not list(tmp_dir.iterdir())
+
+
+_STARTERS = ("start", "toTable")
+
+
+def _stream_start_sites(source: str) -> list[int]:
+    """Lines calling .start()/.toTable() on a writeStream chain, followed
+    through plain name assignments (`w = df.writeStream...; w.start()`)."""
+    import ast
+
+    def from_write_stream(node, names):
+        while True:
+            if isinstance(node, ast.Attribute):
+                if node.attr == "writeStream":
+                    return True
+                node = node.value
+            elif isinstance(node, ast.Call):
+                node = node.func
+            else:
+                return isinstance(node, ast.Name) and node.id in names
+
+    tree = ast.parse(source)
+    assigns = [n for n in ast.walk(tree) if isinstance(n, ast.Assign)]
+    names: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for a in assigns:
+            if from_write_stream(a.value, names):
+                for t in a.targets:
+                    if isinstance(t, ast.Name) and t.id not in names:
+                        names.add(t.id)
+                        grew = True
+    return sorted(
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in _STARTERS
+        and from_write_stream(n.func.value, names)
+    )
+
+
+def test_stream_start_site_detector():
+    src = (
+        "a = df.writeStream.format('memory').start()\n"
+        "w = df.writeStream.option('x', 1)\n"
+        "w = w.trigger(availableNow=True)\n"
+        "w.start()\n"
+        "df.writeStream.toTable('t')\n"
+        "threading.Thread(target=f).start()\n"
+        "q = start_query(spark, df.writeStream.format('memory'))\n"
+    )
+    assert _stream_start_sites(src) == [1, 4, 5]
+
+
+def test_streaming_queries_start_only_in_harness():
+    """One start path: every streaming query in the package starts via
+    streaming.harness.start_query, which sizes state partitions to the
+    cores."""
+    import pathlib
+
+    import cdc_pubsub_spark
+
+    pkg = pathlib.Path(cdc_pubsub_spark.__file__).parent
+    harness = pkg / "streaming" / "harness.py"
+    offenders = [
+        f"{path.relative_to(pkg.parent)}:{line}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != harness
+        for line in _stream_start_sites(path.read_text())
+    ]
+    assert not offenders, f"start streaming queries via start_query: {offenders}"
