@@ -54,6 +54,39 @@ def auth_filter(df, keys: tuple[str, ...], key_col: str = "sharedKey"):
     return df.filter(pred), df.filter(~pred | F.col(key_col).isNull())
 
 
+def dispatch_path(df: DataFrame) -> DataFrame:
+    """The reference's dispatch over a `path` column: resolved → general
+    → unmatched (404), publisher.go:152-165. Adds `route` and the path
+    groups `topic`, `date_part`, `hlc`, `table_attr` ('RESOLVED' for a
+    resolved path, as publisher.go:155-157 intended) and `schema_id`
+    (general paths only); the groups are null on unmatched rows."""
+    is_resolved = F.col("path").rlike(RESOLVED_FILE)
+    is_general = F.col("path").rlike(GENERAL_FILE)
+
+    def gx(pattern: str, i: int) -> F.Column:
+        return F.regexp_extract("path", pattern, i)
+
+    def group(i: int) -> F.Column:
+        return F.when(is_resolved, gx(RESOLVED_FILE, i)).when(
+            is_general, gx(GENERAL_FILE, i)
+        )
+
+    return df.withColumns(
+        {
+            "route": F.when(is_resolved, "resolved")
+            .when(is_general, "general")
+            .otherwise("unmatched"),
+            "topic": group(1),
+            "date_part": group(2),
+            "hlc": group(3),
+            "table_attr": F.when(is_resolved, F.lit("RESOLVED")).when(
+                is_general, gx(GENERAL_FILE, 5)
+            ),
+            "schema_id": F.when(is_general & ~is_resolved, gx(GENERAL_FILE, 6)),
+        }
+    )
+
+
 # 33-digit HLC synthesis: lpad(epoch_ms(orderdate)*1e6 + orderkey*10 +
 # version). Monotone in (orderdate, orderkey, version), pure function of
 # the source row — FIXTURES.md §4 determinism rules.
@@ -248,34 +281,8 @@ def cdc_route_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    df = orders.select("o_orderkey", path.alias("path"))
-    is_resolved = F.col("path").rlike(RESOLVED_FILE)
-    is_general = F.col("path").rlike(GENERAL_FILE)
-    route = (
-        F.when(is_resolved, "resolved")
-        .when(is_general, "general")
-        .otherwise("unmatched")
-    )
-
-    def gx(pattern: str, i: int) -> F.Column:
-        return F.regexp_extract("path", pattern, i)
-
-    return df.select(
-        "o_orderkey",
-        route.alias("route"),
-        F.when(is_resolved, gx(RESOLVED_FILE, 1))
-        .when(is_general, gx(GENERAL_FILE, 1))
-        .alias("topic"),
-        F.when(is_resolved, gx(RESOLVED_FILE, 2))
-        .when(is_general, gx(GENERAL_FILE, 2))
-        .alias("date_part"),
-        F.when(is_resolved, gx(RESOLVED_FILE, 3))
-        .when(is_general, gx(GENERAL_FILE, 3))
-        .alias("hlc"),
-        F.when(is_resolved, F.lit("RESOLVED"))
-        .when(is_general, gx(GENERAL_FILE, 5))
-        .alias("table_attr"),
-        F.when(is_general & ~is_resolved, gx(GENERAL_FILE, 6)).alias("schema_id"),
+    return dispatch_path(orders.select("o_orderkey", path.alias("path"))).select(
+        "o_orderkey", "route", "topic", "date_part", "hlc", "table_attr", "schema_id"
     )
 
 

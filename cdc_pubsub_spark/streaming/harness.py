@@ -4,7 +4,7 @@ Mirrors the reference's transport exactly: the bridge receives NDJSON
 bodies over HTTP (publisher.go:182-202); the engine's equivalent source
 is a landing directory of NDJSON files consumed by `readStream` (SURVEY.md
 §1.3). The harness writes deterministic NDJSON from the `events` table
-(optionally duplicated or split for late-arrival tests) and runs queries
+(optionally duplicated for at-least-once tests) and runs queries
 to completion with Trigger.AvailableNow — real streaming execution
 (micro-batches, state store, watermarks) with a bounded, replayable input,
 so every streaming operator has a batch twin on identical rows
@@ -12,6 +12,17 @@ so every streaming operator has a batch twin on identical rows
 
 Timestamps travel as epoch-micros longs (ts_us) in the JSON — exact,
 engine-neutral serialization; the reader reconstructs TimestampType.
+
+Landing contract: `land(input_dir, *parts)` is the one way staged
+NDJSON enters a landing dir — one HTTP body = one delivery unit in the
+reference, one file here. Each part (a one-column `value` DataFrame)
+becomes one file `NN.ndjson`, written under a staging dir beside
+`input_dir` and renamed in, so a reader never sees a partial file. Each
+file is numbered after, and gets an mtime strictly newer than, every
+file already in the dir; the file source reads in modification-time
+order, so landing order = read order — across calls too (land one
+batch, run a query, land the next; with maxFilesPerTrigger=1 each file
+is its own micro-batch).
 
 Start contract: every streaming query in the engine starts through
 `start_query` (run_to_completion included; tests/test_streaming.py fails
@@ -73,67 +84,51 @@ def _event_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def write_events_ndjson(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    duplicate: bool = False,
-    late_cutoff_days: int | None = None,
-) -> str:
-    """Write events as NDJSON under a fresh landing dir; returns the dir.
+def land(input_dir: str, *parts: DataFrame) -> list[str]:
+    """Land each one-column (`value`) part as one NDJSON file in
+    `input_dir`, in order; returns the landed paths (contract in the
+    module docstring)."""
+    os.makedirs(input_dir, exist_ok=True)
+    stage_root = os.path.normpath(input_dir) + ".staging"
+    names = os.listdir(input_dir)
+    stems = [n.split(".")[0] for n in names]
+    seq = 1 + max((int(s) for s in stems if s.isdigit()), default=-1)
+    mtime = max(
+        [time.time()]
+        + [os.path.getmtime(os.path.join(input_dir, n)) + 1 for n in names]
+    )
+    landed = []
+    for part in parts:
+        stage = os.path.join(stage_root, str(seq))
+        part.coalesce(1).write.mode("overwrite").text(stage)
+        part_file = next(p for p in os.listdir(stage) if p.startswith("part-"))
+        src = os.path.join(stage, part_file)
+        dst = os.path.join(input_dir, f"{seq:02d}.ndjson")
+        # mtime before the rename: the file appears whole and already
+        # in its place in the file source's modification-time order.
+        os.utime(src, (mtime, mtime))
+        os.rename(src, dst)
+        landed.append(dst)
+        seq, mtime = seq + 1, mtime + 1
+    shutil.rmtree(stage_root, ignore_errors=True)
+    return landed
 
-    duplicate=True appends a full second copy of every line (at-least-once
-    delivery simulation). late_cutoff_days splits into three files: file A
-    = events *after* the cutoff (processed first, advancing the
-    watermark), file B = a single copy of the max-ts line (a
-    watermark-kicker batch: Spark applies an advanced watermark to
-    operators one batch AFTER it is computed, so a dedicated tiny batch
-    is needed before late rows are actually filtered), file C = events
-    before the cutoff (arriving late, behind the established watermark).
-    The kicker duplicates one event in the stream's final window, which
-    is never emitted in append mode (its end exceeds the watermark), so
-    emitted window counts are unaffected.
+
+def write_events_ndjson(
+    spark: SparkSession, sf_dir: str, name: str, duplicate: bool = False
+) -> str:
+    """Land the events as NDJSON in a fresh landing dir; returns the dir.
+
+    duplicate=True lands a full second copy as a second file
+    (at-least-once delivery simulation): a reader with
+    maxFilesPerTrigger=1 sees the copies in two micro-batches, an
+    AvailableNow reader without it in one.
     """
     root = os.path.join(BASE, name)
     shutil.rmtree(root, ignore_errors=True)
     input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
-
     lines = _event_lines(spark, sf_dir)
-    if late_cutoff_days is None:
-        df = lines.union(lines) if duplicate else lines
-        df.coalesce(1).write.mode("append").text(input_dir)
-    else:
-        ev = load(spark, sf_dir, "events")
-        # Timezone-independent cutoff: unix_micros inside the plan. A
-        # collected naive datetime's .timestamp() reinterprets the UTC
-        # session value in the HOST zone — on a non-UTC host that shifts
-        # the split boundary off the oracle's epoch-based cutoff.
-        t0_us = ev.agg(
-            F.min(F.unix_micros(F.col("ts").cast("timestamp"))).alias("t0")
-        ).collect()[0]["t0"]
-        cutoff_us = int(t0_us) + late_cutoff_days * 86_400_000_000
-        all_lines = _event_lines(spark, sf_dir).withColumn(
-            "ts_us", F.get_json_object("value", "$.ts_us").cast("bigint")
-        )
-        on_time = all_lines.filter(F.col("ts_us") >= cutoff_us).select("value")
-        late = all_lines.filter(F.col("ts_us") < cutoff_us).select("value")
-        kicker = (
-            all_lines.orderBy(F.col("ts_us").desc()).limit(1).select("value")
-        )
-        dirs = [os.path.join(root, d) for d in ("a", "b", "c")]
-        on_time.coalesce(1).write.text(dirs[0])
-        kicker.coalesce(1).write.text(dirs[1])
-        late.coalesce(1).write.text(dirs[2])
-        # Move the part files into the landing dir with controlled mtimes:
-        # the file source orders files by modification time, so later
-        # stages must be strictly newer.
-        now = time.time()
-        for i, d in enumerate(dirs):
-            part = next(p for p in os.listdir(d) if p.startswith("part-"))
-            dst = os.path.join(input_dir, f"{i:02d}-{part}.ndjson")
-            shutil.move(os.path.join(d, part), dst)
-            os.utime(dst, (now + i * 10, now + i * 10))
+    land(input_dir, *([lines, lines] if duplicate else [lines]))
     return input_dir
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import http.server
 import os
+import re
 import shutil
 import threading
 import urllib.parse
@@ -32,6 +33,7 @@ from cdc_pubsub_spark.streaming.harness import (
     _event_lines,
     BASE,
     EVENT_JSON_SCHEMA,
+    land,
     read_event_stream,
     read_event_stream_push,
     run_to_completion,
@@ -248,24 +250,37 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded from closed windows.
 
     The oracle is the closed-form twin: on-time rows (ts ≥ cutoff =
-    min+1d, the harness's file split) bucketed hourly, restricted to
+    min+1d, the file split below) bucketed hourly, restricted to
     windows finalized under the final watermark (end ≤ max-1d); late
     rows sit entirely below the cutoff, so dropped-by-watermark ≡
     excluded-by-filter. The kicker's duplicate lives in the last (never
     finalized) window and cannot be counted by either side.
 
     File A (recent event times) arrives first and advances the watermark
-    to max(A) - 1 day; a one-line kicker batch propagates it (Spark
-    applies a new watermark to operators one batch after computing it);
-    the late file (the oldest day of events) then arrives entirely behind
-    the established watermark and is dropped
-    (numRowsDroppedByWatermark > 0). The sink holds only windows closed
-    below the watermark, none containing late rows (asserted in
+    to max(A) - 1 day; a one-line kicker batch (a copy of the max-ts
+    line) propagates it (Spark applies a new watermark to operators one
+    batch after computing it); the late file (the oldest day of events)
+    then arrives entirely behind the established watermark and is
+    dropped (numRowsDroppedByWatermark > 0). The sink holds only windows
+    closed below the watermark, none containing late rows (asserted in
     tests/test_streaming.py). This is the engine's RESOLVED contract:
     after the frontier, earlier data is authoritatively final.
     """
-    input_dir = write_events_ndjson(
-        spark, sf_dir, "late_data", late_cutoff_days=1
+    root = os.path.join(BASE, "late_data")
+    shutil.rmtree(root, ignore_errors=True)
+    input_dir = os.path.join(root, "input")
+    # The cutoff is epoch micros computed inside the plan: a collected
+    # naive datetime's .timestamp() would reinterpret the UTC session
+    # value in the host zone and shift the split off the oracle's.
+    lines = _event_lines(spark, sf_dir).withColumn(
+        "ts_us", F.get_json_object("value", "$.ts_us").cast("bigint")
+    )
+    cutoff_us = lines.agg(F.min("ts_us")).collect()[0][0] + 86_400_000_000
+    land(
+        input_dir,
+        lines.filter(F.col("ts_us") >= cutoff_us).select("value"),
+        lines.orderBy(F.col("ts_us").desc()).limit(1).select("value"),
+        lines.filter(F.col("ts_us") < cutoff_us).select("value"),
     )
     stream = read_event_stream(spark, input_dir, max_files_per_trigger=1)
     agg = (
@@ -480,11 +495,13 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Update output mode: only groups changed by each micro-batch are
     emitted (vs complete = everything, append = finalized-only).
 
-    With maxFilesPerTrigger=1 over two files the sink receives multiple
-    versions of updated groups; the final state per group (latest batch
-    wins) must equal the batch aggregate — asserted in
-    tests/test_streaming.py. Update mode is the natural fit for
-    upsert-capable sinks (the CDC consumer writing a keyed store).
+    The duplicated input lands as two files and maxFilesPerTrigger=1
+    reads them as two micro-batches, so the sink receives two versions
+    of every group (n, then 2n); the latest version per group must
+    equal the batch aggregate over the doubled events — asserted in
+    tests/test_streaming.py, which also checks both batches carried
+    input. Update mode is the natural fit for upsert-capable sinks (the
+    CDC consumer writing a keyed store).
     """
     input_dir = write_events_ndjson(spark, sf_dir, "update_mode", duplicate=True)
     stream = read_event_stream(spark, input_dir, max_files_per_trigger=1)
@@ -551,12 +568,11 @@ def pipeline_bridge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     `orders` — the DuckDB oracle derives them relationally. One query,
     hash-verified, covering the reference's full dataflow.
     """
-    from cdc_pubsub_spark.sources.cdc import GENERAL_FILE, RESOLVED_FILE, _hlc33
+    from cdc_pubsub_spark.sources.cdc import _hlc33, auth_filter, dispatch_path
 
     root = os.path.join(BASE, "bridge_e2e")
     shutil.rmtree(root, ignore_errors=True)
     input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
 
     orders = load(spark, sf_dir, "orders")
     day = F.date_trunc("day", F.col("o_orderdate"))
@@ -607,40 +623,22 @@ def pipeline_bridge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("x").alias("body"),
     )
     requests = general.unionByName(resolved).unionByName(bogus)
-    requests.select(
-        F.to_json(F.struct("path", "sharedKey", "body")).alias("value")
-    ).coalesce(1).write.text(os.path.join(root, "staged"))
-    part = next(
-        p for p in os.listdir(os.path.join(root, "staged")) if p.startswith("part-")
-    )
-    shutil.move(
-        os.path.join(root, "staged", part),
-        os.path.join(input_dir, "requests.ndjson"),
-    )
+    land(input_dir, requests.select(F.to_json(F.struct("*")).alias("value")))
 
     # --- the streaming pipeline (A1→A7) ---
     reqs = spark.readStream.schema(
         "path string, sharedKey string, body string"
     ).json(input_dir)
-    admitted = reqs.filter(F.col("sharedKey").isin("xyzzy", "rotated"))  # A2
-    is_resolved = F.col("path").rlike(RESOLVED_FILE)
-    is_general = F.col("path").rlike(GENERAL_FILE)
-    routed = admitted.filter(is_resolved | is_general).select(  # A3/A4 (404 drop)
-        "path",
-        "body",
-        F.when(is_resolved, F.regexp_extract("path", RESOLVED_FILE, 1))
-        .otherwise(F.regexp_extract("path", GENERAL_FILE, 1))
-        .alias("topic_seg"),
-        F.when(is_resolved, F.lit("RESOLVED"))
-        .otherwise(F.regexp_extract("path", GENERAL_FILE, 5))
-        .alias("table_attr"),
+    admitted, _ = auth_filter(reqs, ("xyzzy", "rotated"))  # A2
+    routed = dispatch_path(admitted).filter(  # A3/A4 (404 drop)
+        F.col("route") != "unmatched"
     )
     messages = routed.select(  # A5 split + A6 attrs + A7 prefix
         F.explode(F.split("body", "\n")).alias("data"),
         F.create_map(
             F.lit("path"), F.col("path"), F.lit("table"), F.col("table_attr")
         ).alias("attrs"),
-        F.concat(F.lit("pfx-"), F.col("topic_seg")).alias("topic"),
+        F.concat(F.lit("pfx-"), F.col("topic")).alias("topic"),
         "table_attr",
     ).filter(F.length("data") > 0)
     counted = messages.groupBy("topic", "table_attr").agg(
@@ -684,7 +682,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = os.path.join(BASE, "cdc_upsert")
     shutil.rmtree(root, ignore_errors=True)
     input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
 
     changes = synth_changes(spark, sf_dir)
     line = F.to_json(
@@ -698,18 +695,8 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         {"ignoreNullFields": "false"},
     )
-    import time as _time
-
-    now = _time.time()
-    for ver in (0, 1, 2):
-        vdir = os.path.join(root, f"v{ver}")
-        changes.filter(F.col("ver") == ver).select(line.alias("value")).coalesce(
-            1
-        ).write.text(vdir)
-        part = next(p for p in os.listdir(vdir) if p.startswith("part-"))
-        dst = os.path.join(input_dir, f"{ver:02d}-changes.ndjson")
-        shutil.move(os.path.join(vdir, part), dst)
-        os.utime(dst, (now + ver * 10, now + ver * 10))
+    enveloped = changes.select("ver", line.alias("value"))
+    land(input_dir, *(enveloped.filter(F.col("ver") == v).drop("ver") for v in range(3)))
 
     envelope = T.StructType(
         [
@@ -939,22 +926,12 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_streaming.py.
     """
     import json as _json
-    import time as _time
 
     root = os.path.join(BASE, "ss_left_outer")
     shutil.rmtree(root, ignore_errors=True)
     input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
 
     lines = _event_lines_for_join(spark, sf_dir)
-    lines["events"].coalesce(1).write.text(os.path.join(root, "staged"))
-    part = next(
-        p for p in os.listdir(os.path.join(root, "staged")) if p.startswith("part-")
-    )
-    now = _time.time()
-    dst0 = os.path.join(input_dir, "00-events.ndjson")
-    shutil.move(os.path.join(root, "staged", part), dst0)
-    os.utime(dst0, (now, now))
     # One kicker per SIDE: the watermark nodes sit after the event_type
     # filters, so each side only advances on rows of its own type. The
     # global watermark is min() across nodes — a purchase-only kicker
@@ -962,26 +939,28 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stalled at the last real error. Distinct synthetic users and a 1 h
     # ts gap keep the two kickers from pairing with anything.
     kick_ts = lines["max_ts_us"] + 2 * 3600 * 1_000_000
-    kicker_lines = [
-        _json.dumps(
-            {
-                "event_id": eid,
-                "ts_us": ts,
-                "user_id": uid,
-                "event_type": etype,
-                "value": 0.0,
-                "props": "{}",
-            }
-        )
-        for eid, ts, uid, etype in (
-            (-1, kick_ts, -1, "purchase"),
-            (-2, kick_ts + 3600 * 1_000_000, -2, "error"),
-        )
-    ]
-    dst1 = os.path.join(input_dir, "01-kicker.ndjson")
-    with open(dst1, "w") as f:
-        f.write("\n".join(kicker_lines) + "\n")
-    os.utime(dst1, (now + 10, now + 10))
+    kicker = spark.createDataFrame(
+        [
+            (
+                _json.dumps(
+                    {
+                        "event_id": eid,
+                        "ts_us": ts,
+                        "user_id": uid,
+                        "event_type": etype,
+                        "value": 0.0,
+                        "props": "{}",
+                    }
+                ),
+            )
+            for eid, ts, uid, etype in (
+                (-1, kick_ts, -1, "purchase"),
+                (-2, kick_ts + 3600 * 1_000_000, -2, "error"),
+            )
+        ],
+        "value string",
+    )
+    land(input_dir, lines["events"], kicker)
 
     base = read_event_stream(spark, input_dir, max_files_per_trigger=1)
     purchases = (
@@ -1188,27 +1167,15 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-processing of the first half would double its counts and
     hash-fail.
     """
-    import time as _time
-
     root = os.path.join(BASE, "ckpt_resume")
     shutil.rmtree(root, ignore_errors=True)
     input_dir = os.path.join(root, "input")
     out_dir = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
-    os.makedirs(input_dir)
 
-    # Stage events as two halves (by event_id parity of file assignment:
-    # deterministic 50/50 split), landing the second half only after the
-    # first query instance has terminated.
     lines = _event_lines(spark, sf_dir).withColumn(
         "eid", F.get_json_object("value", "$.event_id").cast("bigint")
     )
-    now = _time.time()
-    for half, pred in (("a", F.col("eid") % 2 == 0), ("b", F.col("eid") % 2 == 1)):
-        staged = os.path.join(root, f"staged_{half}")
-        lines.filter(pred).select("value").coalesce(1).write.text(staged)
-        part = next(p for p in os.listdir(staged) if p.startswith("part-"))
-        shutil.move(os.path.join(staged, part), os.path.join(root, f"{half}.ndjson"))
 
     def publish(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
@@ -1223,15 +1190,13 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    dst_a = os.path.join(input_dir, "00-a.ndjson")
-    shutil.move(os.path.join(root, "a.ndjson"), dst_a)
-    os.utime(dst_a, (now, now))
-    run_instance()  # instance 1: drains half A, stops, releases the dir
-
-    dst_b = os.path.join(input_dir, "01-b.ndjson")
-    shutil.move(os.path.join(root, "b.ndjson"), dst_b)
-    os.utime(dst_b, (now + 10, now + 10))
-    run_instance()  # instance 2: resumes from ckpt, processes ONLY half B
+    # Events split in two halves by event_id parity (deterministic
+    # 50/50). Instance 1 drains the even half and stops; the odd half
+    # lands only then, and instance 2 resumes from the checkpoint and
+    # processes ONLY that half.
+    for parity in (0, 1):
+        land(input_dir, lines.filter(F.col("eid") % 2 == parity).select("value"))
+        run_instance()
 
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
@@ -1496,24 +1461,15 @@ def pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds into each batch's existing aggregation DAG, and the listener
     surface is driver-side O(batches).
     """
-    import time as _time
     import uuid as _uuid
 
     root = os.path.join(BASE, "pipeline_metrics")
     shutil.rmtree(root, ignore_errors=True)
     input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
     lines = _event_lines(spark, sf_dir).withColumn(
         "k", F.get_json_object("value", "$.event_id").cast("bigint") % 3
     )
-    now = _time.time()
-    for i in range(3):
-        staged = os.path.join(root, f"staged_{i}")
-        lines.filter(F.col("k") == i).select("value").coalesce(1).write.text(staged)
-        part = next(p for p in os.listdir(staged) if p.startswith("part-"))
-        dst = os.path.join(input_dir, f"{i:02d}.ndjson")
-        shutil.move(os.path.join(staged, part), dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
+    land(input_dir, *(lines.filter(F.col("k") == i).select("value") for i in range(3)))
 
     stream = read_event_stream(spark, input_dir, max_files_per_trigger=1)
     observed = stream.observe(
@@ -1738,20 +1694,31 @@ def stream_socket_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 class _LandingHandler(http.server.BaseHTTPRequestHandler):
     """One request body -> one atomically-renamed landing file; any other
     path/method is rejected exactly like the reference's mux
-    (server.go:82-92 registers only the feed route), and the sharedKey
-    check runs FIRST — the reference 401s before its path regexes ever
-    see the URL (publisher.go:143-150)."""
+    (server.go:82-92 registers only the feed route). A body without a
+    valid Content-Length is refused (411 missing, 400 malformed) before
+    anything else; then the sharedKey check runs — the reference 401s
+    before its path regexes ever see the URL (publisher.go:143-150)."""
 
     def do_POST(self):  # noqa: N802 (http.server API name)
         rx = self.server.receiver
+        # Only a Content-Length body can be read whole: a chunked or
+        # unframed one would land empty and still be ACKed — the
+        # reference's ACK-on-loss bug (publisher.go:209-211).
+        length = self.headers.get("Content-Length")
+        if length is None:
+            self.send_error(411)
+            return
+        if not re.fullmatch(r"[0-9]+", length.strip()):
+            self.send_error(400)
+            return
+        # Read the body before any rejection: closing with unread bytes
+        # RSTs the client mid-upload (Go's net/http drains short bodies
+        # the same way); a rejected payload is discarded.
+        body = self.rfile.read(int(length))
         path, _, query = self.path.partition("?")
         params = urllib.parse.parse_qs(query)
         key = (params.get("sharedKey") or [""])[0]
         if key not in rx.shared_keys:
-            # Drain the body before rejecting: closing with unread bytes
-            # RSTs the client mid-upload (Go's net/http drains short
-            # bodies the same way); the payload is discarded.
-            self.rfile.read(int(self.headers.get("Content-Length", 0)))
             with rx.lock:
                 rx.n_unauthorized += 1
             self.send_error(401)
@@ -1759,8 +1726,6 @@ class _LandingHandler(http.server.BaseHTTPRequestHandler):
         if path != "/v1/feed":
             self.send_error(404)
             return
-        length = int(self.headers.get("Content-Length", 0))
-        body = self.rfile.read(length)
         # Handler threads run concurrently: hand out the sequence number
         # under the lock, or two POSTs could share a landing file name
         # and one body would silently replace the other.

@@ -115,12 +115,41 @@ def test_stream_cdc_upsert_matches_batch_twin(spark, sf_dir):
 
 def test_update_mode_converges_to_batch_aggregate(spark, sf_dir):
     """Update-mode's latest emission per group must equal the batch
-    aggregate over the doubled stream."""
-    got = {
-        r["event_type"]: (r["n"], r["total_value"])
-        for r in REGISTRY["stream_update_mode"].fn(spark, sf_dir).collect()
-    }
+    aggregate over the doubled stream. The duplicated input lands as two
+    files, so maxFilesPerTrigger=1 gives two micro-batches with input and
+    the latest-version pick has versions to choose between."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    input_rows: list[int] = []
+
+    class _Batches(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.name and p.name.startswith("update_mode_") and p.numInputRows:
+                input_rows.append(p.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _Batches()
+    spark.streams.addListener(listener)
+    try:
+        got = {
+            r["event_type"]: (r["n"], r["total_value"])
+            for r in REGISTRY["stream_update_mode"].fn(spark, sf_dir).collect()
+        }
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    finally:
+        spark.streams.removeListener(listener)
     ev = load(spark, sf_dir, "events")
+    n_events = ev.count()
+    assert input_rows == [n_events, n_events], input_rows
     doubled = ev.unionByName(ev)
     twin = doubled.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("t")
@@ -523,9 +552,7 @@ def test_exactly_once_across_injected_publish_failure(spark, sf_dir):
         os.makedirs(d)
 
     # Split the landing file so maxFilesPerTrigger=1 yields 2+ batches.
-    # (Pick the part- file explicitly: the dir also holds _SUCCESS, and
-    # listdir order is inode-arbitrary.)
-    first = next(p for p in os.listdir(input_dir) if p.startswith("part-"))
+    [first] = os.listdir(input_dir)
     src = os.path.join(input_dir, first)
     with open(src) as fh:
         lines = fh.read().splitlines()
@@ -667,7 +694,7 @@ def test_exactly_once_across_crash_after_sink_commit(spark, sf_dir):
         os.makedirs(d)
     shutil.rmtree(ckpt, ignore_errors=True)
 
-    first = next(p for p in os.listdir(input_dir) if p.startswith("part-"))
+    [first] = os.listdir(input_dir)
     src = os.path.join(input_dir, first)
     with open(src) as fh:
         lines = fh.read().splitlines()
@@ -1094,3 +1121,101 @@ def test_streaming_queries_start_only_in_harness():
         for line in _stream_start_sites(path.read_text())
     ]
     assert not offenders, f"start streaming queries via start_query: {offenders}"
+
+
+def _raw_post(port: int, head: str, body: bytes) -> int:
+    """POST over a raw socket (urllib always frames the body itself);
+    returns the response status."""
+    import socket
+
+    with socket.create_connection(("127.0.0.1", port), timeout=30) as sock:
+        sock.sendall(head.encode() + b"Host: x\r\n\r\n" + body)
+        resp = b""
+        while chunk := sock.recv(4096):
+            resp += chunk
+    return int(resp.split(b" ", 2)[1])
+
+
+def test_http_receiver_refuses_bodies_without_valid_length(tmp_path):
+    """A chunked body (no Content-Length) gets 411 and a malformed
+    Content-Length 400, on the feed and the auth path alike, and nothing
+    lands: the receiver never ACKs a body it could not read whole."""
+    from cdc_pubsub_spark.streaming.ops import HttpLandingReceiver
+
+    input_dir, tmp_dir = tmp_path / "input", tmp_path / "tmp"
+    input_dir.mkdir()
+    tmp_dir.mkdir()
+    rx = HttpLandingReceiver(str(input_dir), str(tmp_dir), {"k"})
+    chunked = ("Transfer-Encoding: chunked\r\n", b"6\r\n{}\n{}\n\r\n0\r\n\r\n")
+    try:
+        for key in ("k", "wrong"):
+            line = f"POST /v1/feed?sharedKey={key} HTTP/1.1\r\n"
+            assert _raw_post(rx.port, line + chunked[0], chunked[1]) == 411, key
+            for bad in ("abc", "-1", "1.5", ""):
+                head = f"{line}Content-Length: {bad}\r\n"
+                assert _raw_post(rx.port, head, b"{}\n") == 400, (key, bad)
+        # the same socket client gets 200 for a well-framed body
+        head = "POST /v1/feed?sharedKey=k HTTP/1.1\r\nContent-Length: 3\r\n"
+        assert _raw_post(rx.port, head, b"{}\n") == 200
+    finally:
+        rx.close()
+    assert [p.read_bytes() for p in input_dir.iterdir()] == [b"{}\n"]
+    assert rx.n_received == 1 and rx.n_unauthorized == 0
+    assert not list(tmp_dir.iterdir())
+
+
+def test_land_numbers_files_after_existing_ones(spark, tmp_path):
+    """Each landed part is one file, numbered and mtime-ordered after
+    every file already in the dir, across calls; the writer's _SUCCESS
+    and .crc files and the staging dir never reach the landing dir."""
+    from cdc_pubsub_spark.streaming.harness import land
+
+    input_dir = tmp_path / "input"
+
+    def part(*values):
+        return spark.createDataFrame([(v,) for v in values], "value string")
+
+    first = land(str(input_dir), part("a1", "a2"), part("b"))
+    second = land(str(input_dir), part("c"))
+    names = [os.path.basename(p) for p in first + second]
+    assert names == ["00.ndjson", "01.ndjson", "02.ndjson"]
+    assert sorted(os.listdir(input_dir)) == names
+    assert os.listdir(tmp_path) == ["input"]
+    mtimes = [os.path.getmtime(p) for p in first + second]
+    assert mtimes == sorted(set(mtimes)), mtimes
+    assert [sorted(open(p).read().split()) for p in first + second] == [
+        ["a1", "a2"],
+        ["b"],
+        ["c"],
+    ]
+
+
+def test_land_order_is_file_source_read_order(spark, tmp_path):
+    """A file source with maxFilesPerTrigger=1 reads one landed file per
+    micro-batch, in landing order — also when the files land in separate
+    calls."""
+    from cdc_pubsub_spark.streaming.harness import land, run_to_completion
+
+    input_dir = str(tmp_path / "input")
+
+    def part(v):
+        return spark.createDataFrame([(v,)], "value string")
+
+    land(input_dir, part("first"), part("second"))
+    land(input_dir, part("third"))
+    batches: list[tuple[int, list[str]]] = []
+
+    def record(batch_df, batch_id):
+        batches.append((batch_id, [r["value"] for r in batch_df.collect()]))
+
+    stream = (
+        spark.readStream.schema("value string")
+        .option("maxFilesPerTrigger", 1)
+        .text(input_dir)
+    )
+    run_to_completion(stream, "land_order", foreach_batch=record)
+    assert [values for _, values in sorted(batches)] == [
+        ["first"],
+        ["second"],
+        ["third"],
+    ]
